@@ -4,8 +4,10 @@ Two stages, exactly as the north-star prescribes:
 
 1. candidate generation — broadcast hash join of mention surface forms
    against a small alias dictionary (no shuffle of the big side);
-2. candidate scoring — one Arrow-batched pandas UDF over (mention, alias,
-   prior) columns, then a window top-1 per mention.
+2. candidate scoring — a pure Catalyst expression over (mention, alias,
+   prior) columns (:func:`link_score_col`, no Arrow hop), then a window
+   top-1 per mention.  The pandas UDF :func:`link_score` it replaced is
+   kept only as the differential-test reference.
 
 The output is a set of owl:sameAs edges feeding canonicalization (cc.py).
 """
@@ -102,7 +104,7 @@ def link_entities(skolemized: DataFrame, alias_dict: DataFrame,
 
     alias_dict(alias string, canonical_iri string, prior double) must be
     small enough to broadcast (the usual case: an alias table is O(10^7)
-    rows ≪ the corpus).  Ambiguous aliases are resolved by the scoring UDF
+    rows ≪ the corpus).  Ambiguous aliases are resolved by the score
     + row_number window.
     """
     mentions = extract_mentions(skolemized)

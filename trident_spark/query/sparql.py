@@ -80,7 +80,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
@@ -1081,6 +1081,21 @@ def _graph_nodes(triples: DataFrame, per_graph: bool = False) -> DataFrame:
     return nodes.select("_ps", F.col("_ps").alias("_po"))
 
 
+def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager localCheckpoint of ``df`` and its row count, in one job (the
+    count is observed while the checkpoint materializes)."""
+    obs = Observation()
+    cp = df.observe(obs, F.count(F.lit(1)).alias("n")) \
+        .localCheckpoint(eager=True)
+    return cp, obs.get["n"]
+
+
+def _release_checkpoint(cp: DataFrame) -> None:
+    """Unpersist the blocks behind an eager localCheckpoint.  ``cp`` (and
+    any frame built on it) must not be read afterwards."""
+    cp._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def _compile_path(triples: DataFrame, node: tuple,
                   prefixes: dict[str, str],
                   per_graph: bool = False) -> DataFrame:
@@ -1089,10 +1104,10 @@ def _compile_path(triples: DataFrame, node: tuple,
     each graph's closure is computed independently by keying every join on
     the graph column too).
 
-    Closures (`+`/`*`) run an iterative driver-side fixpoint (join new
-    frontier against the base relation, union, until no new pairs) — the
-    standard DataFrame transitive closure; each round localCheckpoints to
-    bound lineage.  `*` adds the identity pair for every graph term, per
+    Closures (`+`/`*`) run an iterative driver-side fixpoint (compose the
+    closure-so-far with itself, union, until the pair count stops
+    growing); each round is one eager localCheckpoint, which bounds
+    lineage.  `*` adds the identity pair for every graph term, per
     SPARQL's zero-length-path semantics."""
     kind = node[0]
     g_sel = [F.col("graph").alias("_pg")] if per_graph else []
@@ -1168,7 +1183,14 @@ def _compile_path(triples: DataFrame, node: tuple,
         enc = ([F.xxhash64("_pg").alias("_pg")] if per_graph else []) + [
             F.xxhash64("_ps").alias("_ps"),
             F.xxhash64("_po").alias("_po")]
-        paths = base.select(*enc).distinct().localCheckpoint(eager=True)
+        #
+        # Each round is one job: the grown set is checkpointed and counted
+        # together.  paths ⊆ grown, so an equal count means an equal set —
+        # the fixpoint — without a separate emptiness probe that would run
+        # the self-join a second time.  A superseded round's blocks are
+        # released at once; only ``base`` and the final set stay resident,
+        # because the returned frame reads them.
+        paths, n = _checkpoint_counted(base.select(*enc).distinct())
         while True:
             step = (
                 paths.withColumnRenamed("_po", "_mid")
@@ -1176,10 +1198,12 @@ def _compile_path(triples: DataFrame, node: tuple,
                       g_cols + ["_mid"])
                 .select(*g_cols, "_ps", "_po")
             )
-            new = step.subtract(paths)
-            if not new.take(1):
+            grown, m = _checkpoint_counted(paths.union(step).distinct())
+            _release_checkpoint(paths)
+            paths = grown
+            if m == n:
                 break
-            paths = paths.union(new).distinct().localCheckpoint(eager=True)
+            n = m
         nodes = (
             base.select(F.col("_ps").alias("_lex"))
             .union(base.select("_po")).distinct()
